@@ -47,9 +47,9 @@ def _vdate(c: str) -> Column:
     return clamp_min_date(F.col(c))
 
 
-def _vday(c: str) -> Column:
-    """Clamped, +7h-shifted, day-formatted output date (D3/D4/D6)."""
-    return F.when(F.col(c).isNotNull(), fmt_date(to_jakarta(_vdate(c))))
+def _vday(clamped: Column) -> Column:
+    """+7h-shifted, day-formatted output of a D6-clamped date (D3/D4)."""
+    return F.when(clamped.isNotNull(), fmt_date(to_jakarta(clamped)))
 
 
 def build_pembelian(spark: SparkSession, catalog: Catalog, wm: dt.datetime) -> DataFrame:
@@ -137,13 +137,27 @@ def build_pembelian(spark: SparkSession, catalog: Catalog, wm: dt.datetime) -> D
         .join(F.broadcast(cur), "currencyId", "left")
     )
 
-    po_int_days = day_diff(_vdate("ipoCreatedUtc"), _vdate("prCreatedUtc"))
-    pr_po_ext_days = day_diff(_vdate("epoCreatedUtc"), _vdate("prCreatedUtc"))
-    po_ext_days = day_diff(_vdate("epoCreatedUtc"), _vdate("ipoCreatedUtc"))
-    do_days = day_diff(_vdate("DODate"), _vdate("epoCreatedUtc"))
-    urn_days = day_diff(_vdate("receiptDate"), _vdate("DODate"))
-    upo_days = day_diff(_vdate("interNoteDate"), _vdate("receiptDate"))
-    po_days = day_diff(_vdate("interNoteDate"), _vdate("ipoCreatedUtc"))
+    # Each of these dates feeds an output day and up to four day-diffs,
+    # mostly inside conditional branches where subexpression elimination
+    # cannot share it, so inlined clamps repeat up to 5x per date and the
+    # generated code outgrows the 64 KB JVM method limit (whole-stage
+    # codegen then fails to compile and falls back to per-operator
+    # execution, paying the failed compile on every fresh plan). Clamped once
+    # in their own projection, they stay there: Catalyst does not collapse
+    # a non-cheap expression into a projection that references it twice.
+    reused = (
+        "prCreatedUtc", "ipoCreatedUtc", "epoCreatedUtc", "DODate", "receiptDate", "interNoteDate",
+    )
+    joined = joined.withColumns({f"v_{c}": _vdate(c) for c in reused})
+    pr_d, ipo_d, epo_d, do_d, urn_d, upo_d = (F.col(f"v_{c}") for c in reused)
+
+    po_int_days = day_diff(ipo_d, pr_d)
+    pr_po_ext_days = day_diff(epo_d, pr_d)
+    po_ext_days = day_diff(epo_d, ipo_d)
+    do_days = day_diff(do_d, epo_d)
+    urn_days = day_diff(urn_d, do_d)
+    upo_days = day_diff(upo_d, urn_d)
+    po_days = day_diff(upo_d, ipo_d)
 
     has_ipo = F.col("ipoCreatedUtc").isNotNull()
     has_epo = F.col("epoCreatedUtc").isNotNull()
@@ -153,8 +167,8 @@ def build_pembelian(spark: SparkSession, catalog: Catalog, wm: dt.datetime) -> D
 
     return joined.select(
         nz_str("prNo", sanitize=False).alias("purchase_request_no"),
-        _vday("prCreatedUtc").alias("purchase_request_date"),
-        _vday("prExpectedDeliveryDate").alias("expected_pr_delivery_date"),
+        _vday(pr_d).alias("purchase_request_date"),
+        _vday(_vdate("prExpectedDeliveryDate")).alias("expected_pr_delivery_date"),
         nz_str("budgetCode", sanitize=False).alias("budget_code"),
         nz_str("budgetName", sanitize=False).alias("budget_name"),
         nz_str("unitCode", sanitize=False).alias("unit_code"),
@@ -173,13 +187,13 @@ def build_pembelian(spark: SparkSession, catalog: Catalog, wm: dt.datetime) -> D
         F.when(has_epo, pr_po_ext_days).alias("pr_po_external_days"),
         F.when(has_epo, bucket_days_week(pr_po_ext_days)).alias("pr_po_external_days_range"),
         nz_str("PONo", sanitize=False).alias("purchase_order_no"),
-        _vday("ipoCreatedUtc").alias("purchase_order_date"),
+        _vday(ipo_d).alias("purchase_order_date"),
         F.when(has_epo, po_ext_days).alias("po_external_days"),
         F.when(has_epo, bucket_days_week(po_ext_days)).alias("po_external_days_range"),
         F.when(has_ipo, F.col("ipoCreatedBy")).alias("purchasing_staff_name"),
         nz_str("ipoPrNo", sanitize=False).alias("pr_no_at_po"),
         nz_str("epoNo", sanitize=False).alias("po_external_no"),
-        _vday("epoCreatedUtc").alias("po_external_date"),
+        _vday(epo_d).alias("po_external_date"),
         F.when(has_epo & has_do, do_days).alias("delivery_order_days"),
         F.when(has_epo & has_do, bucket_days_month(do_days)).alias("delivery_order_days_range"),
         nz_str("supplierCode", sanitize=False).alias("supplier_code"),
@@ -195,10 +209,10 @@ def build_pembelian(spark: SparkSession, catalog: Catalog, wm: dt.datetime) -> D
             nz_num("pricePerDealUnit").isNotNull() & nz_num("dealQuantity").isNotNull(),
             F.col("dealQuantity") * F.col("pricePerDealUnit") * F.col("currencyRate"),
         ).alias("total_price"),
-        _vday("ipoExpectedDeliveryDate").alias("expected_delivery_date"),
+        _vday(_vdate("ipoExpectedDeliveryDate")).alias("expected_delivery_date"),
         F.when(F.col("epoNo").isNotNull(), F.col("prNo")).alias("pr_no_at_po_ext"),
         nz_str("DONo", sanitize=False).alias("delivery_order_no"),
-        _vday("DODate").alias("delivery_order_date"),
+        _vday(do_d).alias("delivery_order_date"),
         F.when(has_urn, urn_days).alias("unit_receipt_note_days"),
         F.when(has_urn, bucket_days_week(urn_days)).alias("unit_receipt_note_days_range"),
         F.when(has_do, on_time_status(F.col("DODate"), F.col("ipoExpectedDeliveryDate"))).alias(
@@ -206,11 +220,11 @@ def build_pembelian(spark: SparkSession, catalog: Catalog, wm: dt.datetime) -> D
         ),
         F.when(F.col("DONo").isNotNull(), F.col("prNo")).alias("pr_no_at_do"),
         nz_str("URNNo", sanitize=False).alias("unit_receipt_note_no"),
-        _vday("receiptDate").alias("unit_receipt_note_date"),
+        _vday(urn_d).alias("unit_receipt_note_date"),
         F.when(has_upo, upo_days).alias("unit_payment_order_days"),
         F.when(has_upo, bucket_days_week(upo_days)).alias("unit_payment_order_days_range"),
         nz_str("interNoteNo", sanitize=False).alias("unit_payment_order_no"),
-        _vday("interNoteDate").alias("unit_payment_order_date"),
+        _vday(upo_d).alias("unit_payment_order_date"),
         F.when(has_upo, po_days).alias("purchase_order_days"),
         F.when(has_upo, bucket_days_month(po_days)).alias("purchase_order_days_range"),
         F.when(has_upo, F.col("pricePerDealUnit").cast("string")).alias("invoice_price"),

@@ -423,6 +423,57 @@ def test_watermark_store_survives_empty_or_inflight_log_dir(spark, tmp_path):
     assert store.read_watermark("Fact X") == t1
 
 
+def _spark_jobs(spark, group, action) -> int:
+    """Number of Spark jobs `action` starts, counted through its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_run_row_round_trips_in_one_job_and_file(spark, tmp_path, monkeypatch):
+    """commit_run builds its row from literals on the JVM. Under a non-UTC
+    process time zone, naive datetimes with microseconds, a NULL row count
+    and quoted text read back exactly; each commit is one Spark job adding
+    one parquet file, and a watermark read (schema given, no inference
+    job) takes at most two jobs."""
+    import time
+
+    log = tmp_path / "log_tz"
+    store = WatermarkStore(spark, str(log))
+    job = "Fact 'Jakarta' \"TZ\""
+    t0 = dt.datetime(2024, 3, 1, 23, 59, 58, 123456)
+    t1 = dt.datetime(2024, 3, 2, 0, 3, 1, 654321)
+    t2 = dt.datetime(2024, 3, 2, 22, 0, 0, 1)
+    commits = [
+        (job, t0, t1, "Failed: can't parse \"x\"", None),
+        (job, t2, t2 + dt.timedelta(seconds=90), "Successful", 7),
+    ]
+    files = lambda: len(list(log.glob("*.parquet")))
+    try:
+        with monkeypatch.context() as m:
+            m.setenv("TZ", "Asia/Jakarta")
+            time.tzset()
+            for i, commit in enumerate(commits):
+                before = files()
+                assert _spark_jobs(spark, f"commit-{i}", lambda: store.commit_run(*commit)) == 1
+                assert files() == before + 1
+            assert _spark_jobs(spark, "read", lambda: store.read_watermark(job)) <= 2
+            assert store.read_watermark(job) == t2
+            got = sorted(tuple(r) for r in store._log().collect())
+    finally:
+        time.tzset()
+    want = sorted(
+        (j, s, f, f"{(f - s).total_seconds() / 60:.2f} minutes", st, n)
+        for j, s, f, st, n in commits
+    )
+    assert got == want
+
+
 def test_fsutil_store_path_containing_temporary_substring(spark, tmp_path):
     """A store whose PATH merely contains the text '_temporary' must not
     have its committed files misclassified as in-flight (component-wise

@@ -746,3 +746,25 @@ def test_job_builds_survive_empty_increment(spark, catalog, name):
         assert df.count() == 0, name
     for target, (build_fn, _keys) in spec.extra_targets.items():
         assert build_fn(spark, catalog, future).count() == 0, (name, target)
+
+
+def test_every_build_compiles_under_whole_stage_codegen(spark, catalog):
+    """Every job's plan (main and extra targets) must compile. With the
+    codegen fallback disabled, a generated class that outgrows the JVM's
+    64 KB method limit raises instead of silently running interpreted;
+    a wide projection that inlines a non-cheap expression many times (a
+    date clamp per day-diff) is how a job gets there."""
+    key = "spark.sql.codegen.fallback"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for name, spec in sorted(ALL_SPECS.items()):
+            builds = [spec.build, *(b for b, *_ in spec.extra_targets.values())]
+            for build in builds:
+                df = build(spark, catalog, WM).persist()
+                try:
+                    assert df.count() >= 0, name
+                finally:
+                    df.unpersist()
+    finally:
+        spark.conf.set(key, saved)
